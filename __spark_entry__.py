@@ -42,7 +42,6 @@ from timezone_boundary_builder_spark.operators.similarity import (
     cosine_topk,
     lsh_bucket_ann,
 )
-from timezone_boundary_builder_spark.operators.spatial_join import assign_tzid
 from timezone_boundary_builder_spark.operators.text import (
     LANG_MARKERS,
     STOPWORDS,
@@ -53,6 +52,7 @@ from timezone_boundary_builder_spark.operators.text import (
 )
 from timezone_boundary_builder_spark.operators.validate import validate_overlaps
 from timezone_boundary_builder_spark.operators.zone_build import build_zones
+from timezone_boundary_builder_spark.plans.spread import spread_small_scan
 from timezone_boundary_builder_spark.sources.fixtures import (
     OCEAN_BANDS,
     _box_gj,
@@ -82,29 +82,6 @@ def _local_cellmap() -> CellMap:
     from timezone_boundary_builder_spark.sources.fixtures import local_cellmap
 
     return local_cellmap()
-
-
-def _spread(df: DataFrame, *cols: str, min_bytes: int | None = None) -> DataFrame:
-    """Scale-adaptive parallelism fix for per-row-expensive work over the
-    test corpus's single-row-group parquet files (round 7, guide §2/§6):
-    a one-row-group file scans as ONE task no matter the split config, so
-    a Python-heavy chain downstream runs single-core. When (and only
-    when) the scan has fewer partitions than the cluster's parallelism,
-    hash-repartition the NARROW key columns already selected — the
-    shuffle moves a few bytes per row (never payloads; the heavy columns
-    are generated/derived downstream), the §8 'decide with small rows'
-    shape. On a real multi-file/multi-row-group table this is a no-op,
-    and on a tiny local input the byte gate skips the shuffle too (see
-    plans/spread.py; min_bytes=0 forces the spread for heavy per-row
-    kernels like the image codec)."""
-    from timezone_boundary_builder_spark.plans.spread import (
-        DEFAULT_MIN_SPREAD_BYTES,
-        spread_small_scan,
-    )
-
-    if min_bytes is None:
-        min_bytes = DEFAULT_MIN_SPREAD_BYTES
-    return spread_small_scan(df, *cols, min_bytes=min_bytes)
 
 
 def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -259,14 +236,16 @@ assigned AS (
 
 
 def _q_geo_pip_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from timezone_boundary_builder_spark.operators.spatial_join import assign_tzid_udf
+    from timezone_boundary_builder_spark.operators.spatial_join import (
+        assign_tzid_udf_packed,
+        pack_coords_col,
+    )
 
     bc = spark.sparkContext.broadcast(_local_cellmap())
-    pts = _points(spark, sf_dir)
+    pts = _points(spark, sf_dir).select("url", "lon", "lat", pack_coords_col())
     # knn disabled (-1): pure two-stage join + ocean band -> SQL-expressible.
-    # scalar-UDF path: only (lon,lat)->codes cross the Arrow pipe (tested
-    # row-equal to the mapInPandas path)
-    out = assign_tzid_udf(pts, bc, OCEAN_BANDS, knn_max_m=-1.0, keep_coords=True)
+    # The served packed path; lon/lat pass through as the raw doubles
+    out = assign_tzid_udf_packed(pts, bc, OCEAN_BANDS, knn_max_m=-1.0)
     return out.select("url", "lon", "lat", "tzid")
 
 
@@ -283,10 +262,14 @@ def _q_geo_knn_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment-distance rule is replicated in DuckDB SQL (_knn_assign_sql).
     cell-vs-pip is a physical detail (cover resolution), so both collapse
     to 'land' in the comparable output."""
-    from timezone_boundary_builder_spark.operators.spatial_join import assign_tzid_udf
+    from timezone_boundary_builder_spark.operators.spatial_join import (
+        assign_tzid_udf_packed,
+        pack_coords_col,
+    )
 
     bc = spark.sparkContext.broadcast(_local_cellmap())
-    out = assign_tzid_udf(_points(spark, sf_dir), bc, OCEAN_BANDS)
+    pts = _points(spark, sf_dir).select("url", pack_coords_col())
+    out = assign_tzid_udf_packed(pts, bc, OCEAN_BANDS)
     return out.select(
         "url",
         "tzid",
@@ -304,6 +287,9 @@ def _q_geo_sharded_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     data. Same winner rules, same kernels, so the geo_knn_assign SQL
     oracle applies verbatim — the driver value-checks that removing the
     geometry broadcast changes nothing."""
+    from timezone_boundary_builder_spark.operators.spatial_join import (
+        snapped_coords_cols,
+    )
     from timezone_boundary_builder_spark.operators.spatial_join_sharded import (
         assign_tzid_sharded,
         zone_edges_frame,
@@ -314,9 +300,9 @@ def _q_geo_sharded_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     tz_bc = spark.sparkContext.broadcast(list(cm.tzids))
     zones_df = spark.createDataFrame(_local_zones()[["tzid", "geometry"]])
     edges = zone_edges_frame(zones_df, tz_bc, n_shards=8)
-    out = assign_tzid_sharded(
-        _points(spark, sf_dir), bc, edges, OCEAN_BANDS, n_shards=8
-    )
+    # the packed path's snapped coordinates (its 1e-6 precision model)
+    pts = _points(spark, sf_dir).select("url", *snapped_coords_cols())
+    out = assign_tzid_sharded(pts, bc, edges, OCEAN_BANDS, n_shards=8)
     return out.select(
         "url",
         "tzid",
@@ -771,19 +757,20 @@ def _q_geo_manifest_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_geo_lineage_conservation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B9 lineage + metrics as a gate relation: a row-preserving tokenize
-    stage over `documents` wrapped in StageMetrics accumulators, with
-    per-partition lineage tables aggregated to (side, n_rows, key_min,
-    key_max) for input and output — row conservation and key-range
-    equality are directly DuckDB-checkable against the raw parquet; the
-    stage_metrics row proves the accumulator wrap counted every Arrow
-    batch exactly once."""
-    from timezone_boundary_builder_spark.plans.lineage import (
-        StageMetrics,
-        lineage_table,
-    )
+    stage over `documents` with its input and output row counts observed
+    (DataFrame.observe — exactly-once, unlike accumulators, which
+    over-count on task retry), and per-partition lineage tables
+    aggregated to (side, n_rows, key_min, key_max) for input and output —
+    row conservation and key-range equality are directly
+    DuckDB-checkable against the raw parquet; the stage_metrics row
+    proves the observed count saw every row exactly once."""
+    from pyspark.sql import Observation
+
+    from timezone_boundary_builder_spark.plans.lineage import lineage_table
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    ms = StageMetrics(spark, "tokenize")
+    rows = F.count(F.lit(1)).alias("rows")
+    obs_in, obs_out = Observation("tokenize_in"), Observation("tokenize_out")
 
     def _tok(batches):
         for pdf in batches:
@@ -794,8 +781,11 @@ def _q_geo_lineage_conservation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    out = docs.select("doc_id", "text").mapInPandas(
-        ms.wrap(_tok), "doc_id long, n_tokens long"
+    out = (
+        docs.select("doc_id", "text")
+        .observe(obs_in, rows)
+        .mapInPandas(_tok, "doc_id long, n_tokens long")
+        .observe(obs_out, rows)
     )
 
     def _rollup(df: DataFrame, side: str) -> DataFrame:
@@ -810,8 +800,8 @@ def _q_geo_lineage_conservation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     pdf = _rollup(docs, "input").unionByName(_rollup(out, "output")).toPandas()
-    snap = ms.snapshot()
-    assert snap["rows_in"] == snap["rows_out"], snap  # conservation
+    n_in, n_out = obs_in.get["rows"], obs_out.get["rows"]
+    assert n_in == n_out, (n_in, n_out)  # conservation
     pdf = pd.concat(
         [
             pdf,
@@ -819,7 +809,7 @@ def _q_geo_lineage_conservation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 [
                     {
                         "side": "stage_metrics",
-                        "n_rows": snap["rows_out"],
+                        "n_rows": n_out,
                         "key_min": "tokenize",
                         "key_max": "tokenize",
                     }
@@ -1212,11 +1202,11 @@ def _q_pipeline_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with_quality stopword filter — same tokenization, same ints), and
     # the round(int/int, 6) ratio stays JVM-side, so the kept set is
     # identical to the old with_quality filter. The kernel's
-    # nondeterministic marker keeps the filter ABOVE the _spread
-    # exchange — with_quality's JVM array predicates were pushed to the
-    # single-task test scan and ran one-core.
+    # nondeterministic marker keeps the filter ABOVE the
+    # spread_small_scan exchange — with_quality's JVM array predicates
+    # were pushed to the single-task test scan and ran one-core.
     st = F.col("__st")
-    base = _spread(
+    base = spread_small_scan(
         _docs(spark, sf_dir).select("doc_id", "text", "lang"), "doc_id"
     ).withColumn("__st", gopher_stats_udf()(F.col("text")))
     kept = base.where(
@@ -1256,7 +1246,7 @@ def _q_pipeline_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the JVM plan, so the kept set is identical (same DuckDB oracle).
     st = F.col("__st")
     fr = repetition_fracs(st)
-    base = _spread(
+    base = spread_small_scan(
         _docs(spark, sf_dir).select("doc_id", "text", "lang"), "doc_id"
     ).withColumn("__st", gopher_stats_udf()(F.col("text")))
     gated = base.where(
@@ -1702,7 +1692,9 @@ def _q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=["url", "html"])
 
     pages = (
-        _spread(_docs(spark, sf_dir).select("doc_id"), "doc_id", min_bytes=0)
+        spread_small_scan(
+            _docs(spark, sf_dir).select("doc_id"), "doc_id", min_bytes=0
+        )
         .mapInPandas(_gen, "url string, html binary")
     )
     resized = resize_images(pages, target_w=8, target_h=8, use_real_codec=True)

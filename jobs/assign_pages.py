@@ -117,6 +117,7 @@ def main(argv=None) -> int:
     from timezone_boundary_builder_spark.operators.spatial_join import (
         assign_tzid_udf_packed,
         pack_coords_col,
+        snapped_coords_cols,
     )
     from timezone_boundary_builder_spark.plans.lineage import lineage_table
     from timezone_boundary_builder_spark.plans.manifests import (
@@ -175,9 +176,11 @@ def main(argv=None) -> int:
     # cached stage after a flag change
     # "v2": the cached assign stage now carries warc_ts (composite row
     # identity for tables where urls recur across crawls) — the format
-    # marker keeps an older cached stage from replaying without it
+    # marker keeps an older cached stage from replaying without it.
+    # "v3": the sharded mode assigns the 1e-6-snapped point, as the
+    # broadcast mode always did; its older cached stages used raw doubles
     stage_fp = fingerprint(
-        "assign-v2",
+        "assign-v3",
         str(sid),
         str(args.ts_day_min),
         str(args.ts_day_max),
@@ -223,7 +226,11 @@ def main(argv=None) -> int:
                 tz_bc,
                 n_shards=max(16, args.cores),
             )
-            pts = with_coordinates(scan).select("url", "warc_ts", "lon", "lat")
+            # the broadcast kernel's 1e-6 precision model, so both modes
+            # assign the same snapped point
+            pts = with_coordinates(scan).select(
+                "url", "warc_ts", *snapped_coords_cols()
+            )
             # staging path is derived from the stage fingerprint
             # (round-6 ADVICE): two runs sharing a work dir (a retry
             # racing a stuck run, different snapshots) must not clobber

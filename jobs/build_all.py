@@ -133,7 +133,8 @@ def main(argv=None) -> int:
     stages = {}
 
     # progress/ETA tracker (reference util/progressStats.js) — stage-level
-    # on Spark: rows are executor business, tracked by lineage accumulators
+    # on Spark: rows are executor business (DataFrame.observe or the
+    # lineage tables of plans/lineage.py), not the tracker's
     from timezone_boundary_builder_spark.plans.progress import ProgressStats
 
     n_strategies = 2 - int(args.skip_1970_zones) - int(args.skip_now_zones)

@@ -168,15 +168,27 @@ def test_assign_job_runs_with_package_only_syspath(spark, tmp_path):
     assert r["rows"] == 120 and r["text_invariant_ok"] is True
 
 
-def test_assign_job_stage2_sharded_matches_broadcast(pages_root, tmp_path):
+def test_assign_job_stage2_sharded_matches_broadcast(spark, tmp_path):
     """--stage2 sharded (slim-index broadcast + shard-cogrouped edge
     join) must publish EXACTLY the rows the broadcast path publishes —
     same methods mix, same (url, warc_ts, tzid, method) set — on the
-    fixture world whose synthetic mix exercises cell/pip/knn/ocean/none.
-    The stage fingerprint carries the mode, so switching does not
-    replay the other mode's cached stage."""
+    fixture world whose synthetic mix exercises cell/pip/knn/ocean/none,
+    plus off-grid pages 4e-7 deg from a zone edge (both modes assign the
+    1e-6-snapped point). The stage fingerprint carries the mode, so
+    switching does not replay the other mode's cached stage."""
     import duckdb
+    import pandas as pd
 
+    from tests._offgrid import assert_snapped_zones, off_grid_pages_pdf
+    from timezone_boundary_builder_spark.sources import pages as pt
+    from timezone_boundary_builder_spark.sources.fixtures import synthetic_pages
+
+    pages_root = str(tmp_path / "pages_tbl")
+    pdf = pd.concat(
+        [synthetic_pages(n=600, seed=9).drop(columns=["kind"]), off_grid_pages_pdf()],
+        ignore_index=True,
+    )
+    pt.commit_append(pages_root, spark.createDataFrame(pdf))
     wb, ob = str(tmp_path / "wb"), str(tmp_path / "ob")
     ws, os_ = str(tmp_path / "ws"), str(tmp_path / "os")
     rb = _run(pages_root, wb, ob)
@@ -189,7 +201,7 @@ def test_assign_job_stage2_sharded_matches_broadcast(pages_root, tmp_path):
         os_,
         extra=("--stage2", "sharded", "--sharded-stage1", "staging"),
     )
-    assert rs["rows"] == rb["rows"] == 600
+    assert rs["rows"] == rb["rows"] == 602
     assert rs["methods"] == rb["methods"]
     assert rs["text_invariant_ok"] is True
     import glob
@@ -204,6 +216,9 @@ def test_assign_job_stage2_sharded_matches_broadcast(pages_root, tmp_path):
           SELECT url, warc_ts, tzid, method FROM '{os_}/assigned_pages/*.parquet')"""
     ).fetchone()[0]
     assert only == 0
+    for out in (ob, os_):
+        rows = duckdb.sql(f"SELECT url, tzid FROM '{out}/assigned_pages/*.parquet'")
+        assert_snapped_zones(dict(rows.fetchall()))
     # --stage2 auto with a budget below the map must resolve to the
     # SAME stage as the explicit sharded run: the fingerprint carries
     # the resolved mode, so this is a cache hit, not a recompute

@@ -26,7 +26,10 @@ from timezone_boundary_builder_spark.operators.cover import (
     build_cell_covers,
     collect_cell_map,
 )
-from timezone_boundary_builder_spark.operators.spatial_join import assign_tzid
+from timezone_boundary_builder_spark.operators.spatial_join import (
+    assign_tzid_udf_packed,
+    pack_coords_col,
+)
 from timezone_boundary_builder_spark.sources.fixtures import (
     dense_zone_world,
     dense_world_points,
@@ -122,10 +125,8 @@ def test_dense_world_assignment_matches_construction(spark, dense_cellmap):
     world, cm = dense_cellmap
     pts = dense_world_points(world, NX, NY, n=20_000)
     bc = spark.sparkContext.broadcast(cm)
-    df = spark.createDataFrame(pts)
-    out = assign_tzid(df, bc, ocean_bands=[]).join(
-        df.select("url", "expect_tzid"), "url"
-    )
+    df = spark.createDataFrame(pts).select("url", "expect_tzid", pack_coords_col())
+    out = assign_tzid_udf_packed(df, bc, ocean_bands=[])
     mism = out.where(F.col("tzid") != F.col("expect_tzid"))
     bad = mism.limit(5).collect()
     assert not bad, bad

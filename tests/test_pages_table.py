@@ -6,7 +6,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from timezone_boundary_builder_spark.plans.lineage import StageMetrics, lineage_table
+from timezone_boundary_builder_spark.plans.lineage import lineage_table
 from timezone_boundary_builder_spark.plans.manifests import StageManifest, fingerprint
 from timezone_boundary_builder_spark.sources import pages as pg
 from timezone_boundary_builder_spark.sources.fixtures import synthetic_pages
@@ -86,19 +86,25 @@ def test_lineage_and_metrics(spark, pages_pdf):
     lin2 = lineage_table(df.repartition(2, "url"), "url").toPandas()
     assert lin2.n_rows.sum() == 300
 
-    # accumulator wrapping counts rows through a pass-through stage
-    import pandas as pd
+    # DataFrame.observe counts rows into and out of a pass-through stage
+    from pyspark.sql import Observation
 
-    met = StageMetrics(spark, "identity")
+    obs_in, obs_out = Observation("identity_in"), Observation("identity_out")
 
     def identity(batches):
         for b in batches:
             yield b
 
-    out = df.select("url").mapInPandas(met.wrap(identity), "url string")
-    assert out.count() == 300
-    snap = met.snapshot()
-    assert snap["rows_in"] == 300 and snap["rows_out"] == 300 and snap["batches"] >= 1
+    rows = F.count(F.lit(1)).alias("rows")
+    out = (
+        df.select("url")
+        .observe(obs_in, rows)
+        .mapInPandas(identity, "url string")
+        .observe(obs_out, rows)
+    )
+    # noop sink: every row flows through the stage (count() could prune it)
+    out.write.format("noop").mode("overwrite").save()
+    assert obs_in.get["rows"] == 300 and obs_out.get["rows"] == 300
 
 
 def test_compaction_rewrites_without_changing_content(spark, tmp_path, pages_pdf):

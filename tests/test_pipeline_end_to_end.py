@@ -22,7 +22,8 @@ from timezone_boundary_builder_spark.operators.cover import (
 from timezone_boundary_builder_spark.operators.geocode import with_coordinates
 from timezone_boundary_builder_spark.operators.spatial_join import (
     KNN_MAX_METERS,
-    assign_tzid,
+    assign_tzid_udf_packed,
+    pack_coords_col,
 )
 from timezone_boundary_builder_spark.operators.zone_build import build_zones
 from timezone_boundary_builder_spark.sources.fixtures import (
@@ -97,9 +98,9 @@ def test_two_stage_join_matches_brute_force(spark, zones_df, zones_pdf):
     cm = collect_cell_map(covers, zones_df)
     bc = spark.sparkContext.broadcast(cm)
 
-    with_xy = with_coordinates(pages)
+    with_xy = with_coordinates(pages).select("url", "lon", "lat", pack_coords_col())
     got = (
-        assign_tzid(with_xy, bc, OCEAN_BANDS)
+        assign_tzid_udf_packed(with_xy, bc, OCEAN_BANDS)
         .toPandas()
         .sort_values("url")
         .reset_index(drop=True)
@@ -139,35 +140,6 @@ def test_urban_skew_present():
     is designed for (FIXTURES.md §1)."""
     pages = synthetic_pages(n=2000, seed=42)
     assert (pages.kind == "urban").mean() >= 0.25
-
-
-def test_udf_assign_equals_mapinpandas(spark, zones_df, zones_pdf):
-    """The scalar-pandas-UDF hot path (codes over the Arrow pipe, strings
-    materialized JVM-side) must match the mapInPandas path row-for-row —
-    including nulls (method 'none'), kNN and ocean fallbacks."""
-    import pandas as pd
-
-    from timezone_boundary_builder_spark.operators.spatial_join import assign_tzid_udf
-
-    pages_pdf = synthetic_pages(n=1500, seed=42)
-    pages = spark.createDataFrame(pages_pdf.drop(columns=["kind"]))
-    covers = build_cell_covers(zones_df, max_res=7)
-    bc = spark.sparkContext.broadcast(collect_cell_map(covers, zones_df))
-    with_xy = with_coordinates(pages)
-    a = (
-        assign_tzid(with_xy, bc, OCEAN_BANDS)
-        .select("url", "lon", "lat", "tzid", "method")
-        .toPandas()
-        .sort_values("url")
-        .reset_index(drop=True)
-    )
-    b = (
-        assign_tzid_udf(with_xy, bc, OCEAN_BANDS, keep_coords=True)
-        .toPandas()
-        .sort_values("url")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a, b)
 
 
 def test_geocode_separator_strictness(spark):

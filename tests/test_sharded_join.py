@@ -2,7 +2,9 @@
 (spatial_join_sharded) must return ROW-IDENTICAL assignments to the
 broadcast CellMap path on worlds that exercise every outcome — full-cell
 hits, boundary PIP (with the overlap tie-break), kNN within 1852 m,
-ocean bands, none, and NaN coordinates.
+ocean bands, none, and NaN coordinates. Both take the same 1e-6-snapped
+points (pack_coords_col for the packed UDF, snapped_coords_cols for the
+sharded path), as the assign_pages job does.
 
 Identity is exact (not approximate): both paths share the probe, the
 pair-expansion ray-cast arithmetic, the distance kernel, and the winner
@@ -15,7 +17,11 @@ import pandas as pd
 import pytest
 
 from timezone_boundary_builder_spark.operators.cover import cellmap_from_zones_pdf
-from timezone_boundary_builder_spark.operators.spatial_join import assign_tzid
+from timezone_boundary_builder_spark.operators.spatial_join import (
+    assign_tzid_udf_packed,
+    pack_coords_col,
+    snapped_coords_cols,
+)
 from timezone_boundary_builder_spark.operators.spatial_join_sharded import (
     assign_tzid_sharded,
     zone_edges_frame,
@@ -52,9 +58,16 @@ def _run_both(
     zones_df = spark.createDataFrame(zones_pdf[["tzid", "geometry"]])
     edges = zone_edges_frame(zones_df, tz_bc, n_shards=n_shards)
     pts = spark.createDataFrame(points_pdf)
-    ref = assign_tzid(pts, bc_full, bands).toPandas()
+    ref = assign_tzid_udf_packed(
+        pts.select("url", pack_coords_col()), bc_full, bands
+    ).toPandas()
     got = assign_tzid_sharded(
-        pts, bc_slim, edges, bands, n_shards=n_shards, stage1_path=stage1_path
+        pts.select("url", *snapped_coords_cols()),
+        bc_slim,
+        edges,
+        bands,
+        n_shards=n_shards,
+        stage1_path=stage1_path,
     ).toPandas()
     for bc in (bc_full, bc_slim, tz_bc):
         bc.destroy()

@@ -21,7 +21,16 @@ from timezone_boundary_builder_spark.streaming.assign_stream import (
 
 
 def test_stream_assign_matches_batch(spark, tmp_path):
-    pages_pdf = synthetic_pages(n=400, seed=3).drop(columns=["kind"])
+    """The stream assigns exactly what the batch job's packed path does —
+    including off-grid pages that sit 4e-7 deg from a zone edge, where a
+    path on raw doubles and one on snapped coordinates disagree."""
+    from tests._offgrid import assert_snapped_zones, off_grid_pages_pdf
+
+    pages_pdf = pd.concat(
+        [synthetic_pages(n=400, seed=3).drop(columns=["kind"]), off_grid_pages_pdf()],
+        ignore_index=True,
+    )
+    n = len(pages_pdf)
     src = str(tmp_path / "src")
     sink = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
@@ -32,35 +41,43 @@ def test_stream_assign_matches_batch(spark, tmp_path):
     q.awaitTermination(300)
 
     got = spark.read.parquet(sink).toPandas().sort_values("url").reset_index(drop=True)
-    assert len(got) == 400
+    assert len(got) == n
+    assert got.columns.tolist() == ["url", "lon", "lat", "tzid", "method"]
 
-    # batch reference: identical operator on the same rows
+    # batch reference: the assign_pages job's packed path on the same rows
     from timezone_boundary_builder_spark.operators.geocode import with_coordinates
-    from timezone_boundary_builder_spark.operators.spatial_join import assign_tzid
+    from timezone_boundary_builder_spark.operators.spatial_join import (
+        assign_tzid_udf_packed,
+        pack_coords_col,
+    )
 
+    pts = with_coordinates(spark.read.parquet(src)).select(
+        "url", "warc_ts", pack_coords_col()
+    )
     batch = (
-        assign_tzid(with_coordinates(spark.read.parquet(src)), bc, OCEAN_BANDS)
+        assign_tzid_udf_packed(pts, bc, OCEAN_BANDS)
         .toPandas()
         .sort_values("url")
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got[["url", "tzid", "method"]], batch[["url", "tzid", "method"]])
+    assert_snapped_zones(dict(zip(got["url"], got["tzid"])))
 
     # restart with same checkpoint + no new files -> no duplicate output
     q2 = stream_assign(spark, src, sink, ckpt, bc, OCEAN_BANDS)
     q2.awaitTermination(120)
-    assert spark.read.parquet(sink).count() == 400
+    assert spark.read.parquet(sink).count() == n
 
     # second tranche lands in the source dir; a third restart from the
     # SAME checkpoint processes exactly the delta (exactly-once across
-    # restarts: 400 old rows untouched, 150 new rows appear once)
+    # restarts: old rows untouched, 150 new rows appear once)
     tranche2 = synthetic_pages(n=150, seed=11).drop(columns=["kind"])
     tranche2["url"] = "t2-" + tranche2["url"].astype(str)
     spark.createDataFrame(tranche2).write.mode("append").parquet(src)
     q3 = stream_assign(spark, src, sink, ckpt, bc, OCEAN_BANDS)
     q3.awaitTermination(120)
     out = spark.read.parquet(sink).toPandas()
-    assert len(out) == 550 and out.url.nunique() == 550
+    assert len(out) == n + 150 and out.url.nunique() == n + 150
     assert (out.url.str.startswith("t2-")).sum() == 150
 
 

@@ -1,7 +1,8 @@
 """Two-stage spatial join: broadcast cell-cover probe + exact vectorized
 ray-casting PIP, with kNN / ocean-band fallback (north_star hot path).
 
-One mapInPandas pass over the pages table:
+One scalar pandas UDF (assign_tzid_udf_packed) over a packed int64
+micro-degree coordinate column; each Arrow batch runs assign_codes:
 
   stage 1  point -> cell ids (bit ops) -> np.searchsorted into the
            broadcast CellMap; FULL hit assigns immediately
@@ -28,6 +29,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..geom.kernels import min_distance_edges_m, pair_edge_d2, points_in_edges
 
@@ -37,11 +39,7 @@ KNN_MAX_METERS = 1852.0  # 1 nautical mile
 # at high latitude
 KNN_BBOX_PAD_DEG = 0.1
 
-ASSIGN_SCHEMA = "url string, lon double, lat double, tzid string, method string"
-ASSIGN_SCHEMA_SLIM = "url string, tzid string, method string"
-
-
-# method codes (shared by the mapInPandas and scalar-UDF paths)
+# method codes (shared by the broadcast UDF and the sharded stage 2)
 M_CELL, M_PIP, M_KNN, M_OCEAN, M_NONE = 0, 1, 2, 3, 4
 METHOD_NAMES = ["cell", "pip", "knn", "ocean", "none"]
 
@@ -176,12 +174,9 @@ def _fold_knn_winners(pair_pt, pair_z, d_pair, best_d, best_z):
     """ONE winner rule for both kNN candidate paths: the assigned zone is
     the smallest zone index within 1e-9 m of the global minimum distance
     — exactly the geo_knn_assign SQL oracle and test_interval_probe rule.
-    The per-zone loop used to keep a running-min chain ("first zone not
-    beaten by >1e-9"), which can pick a DIFFERENT zone than this rule
-    when several zones tie within chained sub-nanometer gaps (round-5
-    ADVICE) — so whether a chunk crossed PAIR_PIP_MIN_ZONES could flip
-    the answer. Both regimes now fold through here; mutates
-    best_d / best_z in place."""
+    A running-min chain instead can pick a different zone on chained
+    sub-nanometer ties, so whether a chunk crossed PAIR_PIP_MIN_ZONES
+    could flip the answer. Mutates best_d / best_z in place."""
     np.minimum.at(best_d, pair_pt, d_pair)
     big = np.iinfo(np.int64).max
     cand_z = np.full(len(best_d), big, dtype=np.int64)
@@ -225,7 +220,7 @@ def assign_codes(
     method_code) int32/int8 arrays. code indexes cm.tzids for land hits and
     len(cm.tzids)+band for ocean bands; -1 for rows with no coordinate.
     This keeps the Arrow return path at 5 bytes/row — the tzid strings are
-    materialized JVM-side (assign_tzid_udf) or by the caller.
+    materialized JVM-side (assign_tzid_udf_packed) or by the caller.
 
     Rows are processed in cache-resident chunks (per-point independent, so
     chunking is semantics-free). The chunk grows with the zone count: the
@@ -374,11 +369,8 @@ def _assign_codes_block(
                         cm, ml, ma, pair_pt, pair_z, seam, best_d, best_z
                     )
                 else:
-                    # per-zone distance kernel, but the WINNER is picked
-                    # by the shared _fold_knn_winners rule afterwards —
-                    # the old running-min chain ("strictly better by
-                    # >1e-9 wins") could disagree with the pair path on
-                    # chained sub-nanometer ties (round-5 ADVICE)
+                    # per-zone distance kernel; the WINNER is picked by
+                    # the shared _fold_knn_winners rule afterwards
                     d_pair = np.empty(len(pair_pt))
                     for z, s0, s1 in zip(zvals, zstarts, zends):
                         sel = pair_pt[s0:s1]
@@ -427,91 +419,48 @@ def _band_edges(ocean_bands: list[dict]) -> np.ndarray:
     return np.array([b["left"] for b in ocean_bands] + [ocean_bands[-1]["right"]])
 
 
-def make_assign_fn(
-    cellmap_bc,
-    ocean_bands: list[dict],
-    knn_max_m: float = KNN_MAX_METERS,
-    slim: bool = False,
-):
-    """Returns a mapInPandas function closing over the broadcast CellMap and
-    the (tiny) ocean band table."""
-    band_edges = _band_edges(ocean_bands)
-    band_tzids = [b["tzid"] for b in ocean_bands]
-    method_arr = np.asarray(METHOD_NAMES, dtype=object)
-
-    def _assign(batches):
-        cm = cellmap_bc.value
-        tz_arr = np.asarray(list(cm.tzids) + band_tzids + [None], dtype=object)
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            lon = pdf["lon"].to_numpy(dtype=np.float64, na_value=np.nan)
-            lat = pdf["lat"].to_numpy(dtype=np.float64, na_value=np.nan)
-            codes, mcodes = assign_codes(
-                cm, band_edges, len(band_tzids), lon, lat, knn_max_m
-            )
-            tz = tz_arr[codes]  # -1 -> trailing None slot
-            method = method_arr[mcodes]
-            if slim:
-                # hot-path shape: don't ship the coordinates back through
-                # Arrow — the caller can re-join them by url if needed
-                yield pd.DataFrame(
-                    {"url": pdf["url"].to_numpy(), "tzid": tz, "method": method}
-                )
-            else:
-                yield pd.DataFrame(
-                    {
-                        "url": pdf["url"].to_numpy(),
-                        "lon": lon,
-                        "lat": lat,
-                        "tzid": tz,
-                        "method": method,
-                    }
-                )
-
-    return _assign
-
-
-def assign_tzid(
-    pages_with_coords: DataFrame,
-    cellmap_bc,
-    ocean_bands: list[dict],
-    knn_max_m: float = KNN_MAX_METERS,
-    slim: bool = False,
-) -> DataFrame:
-    """pages(url, lon, lat, ...) -> assignments(url[, lon, lat], tzid, method).
-
-    method: cell (full-cell hit) | pip (boundary cell + exact test) |
-    knn (offshore <= 1852 m) | ocean (Etc band) | none (no coordinate).
-    slim=True drops the coordinate echo from the Arrow return path (the
-    10^12-row hot-path shape).
-    """
-    fn = make_assign_fn(cellmap_bc, ocean_bands, knn_max_m, slim=slim)
-    schema = ASSIGN_SCHEMA_SLIM if slim else ASSIGN_SCHEMA
-    return pages_with_coords.select("url", "lon", "lat").mapInPandas(fn, schema)
+def _packed_xy():
+    lon_u = F.round((F.col("lon") + F.lit(180.0)) * F.lit(1_000_000.0)).cast("long")
+    lat_u = F.round((F.col("lat") + F.lit(90.0)) * F.lit(1_000_000.0)).cast("long")
+    return F.shiftleft(lon_u, 32) + lat_u
 
 
 def pack_coords_col():
-    """JVM-side packed int64 micro-degree coordinate codec: lon/lat snapped
-    to the 1e-6-degree grid (exactly the reference's fixed precision model,
-    index.js:327-328) and packed ((lon+180)*1e6) << 32 | ((lat+90)*1e6).
-    Halves the JVM->Python Arrow bytes of the hot path (8 B/row vs two
-    f64). Decode is x/1e6 - offset — the same rational-division shape as
-    the double path, so grid-aligned coordinates round-trip bit-exactly."""
-    import pyspark.sql.functions as F
+    """JVM-side packed int64 micro-degree coordinate column `xy` from
+    (lon, lat): ((lon+180)*1e6) << 32 | ((lat+90)*1e6), rounded to the
+    1e-6 grid. Halves the JVM->Python Arrow bytes of the hot path (8 B/row
+    vs two f64). Null lon or lat -> null xy (method 'none')."""
+    return _packed_xy().alias("xy")
 
-    lon_u = F.round((F.col("lon") + F.lit(180.0)) * F.lit(1_000_000.0)).cast("long")
-    lat_u = F.round((F.col("lat") + F.lit(90.0)) * F.lit(1_000_000.0)).cast("long")
-    return (F.shiftleft(lon_u, 32) + lat_u).alias("xy")
+
+def decode_xy(v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Python-side decode of pack_coords_col values (null read as -1):
+    x/1e6 - offset per half; negative -> NaN (no coordinate)."""
+    lon = (v >> np.int64(32)) / 1e6 - 180.0
+    lat = (v & np.int64(0xFFFFFFFF)) / 1e6 - 90.0
+    bad = v < 0
+    if bad.any():
+        lon[bad] = np.nan
+        lat[bad] = np.nan
+    return lon, lat
+
+
+def snapped_coords_cols():
+    """(lon, lat) columns as assign_tzid_udf_packed sees them: packed as
+    in pack_coords_col, then decoded JVM-side with decode_xy's arithmetic
+    (x/1e6 - offset). For paths that take doubles (the sharded stage 2),
+    so they assign the same snapped point the packed UDF does."""
+    xy = _packed_xy()
+    return [
+        (F.shiftright(xy, 32) / F.lit(1e6) - F.lit(180.0)).alias("lon"),
+        (xy.bitwiseAND(F.lit(0xFFFFFFFF)) / F.lit(1e6) - F.lit(90.0)).alias("lat"),
+    ]
 
 
 def _string_array_expr(vals: list[str]):
     """A literal string array as ONE F.expr — per-element F.lit chains
     cost a py4j round trip each at plan-build time (measured ~10 s of
     pure driver latency for a 10,000-tzid world, dwarfing the job)."""
-    import pyspark.sql.functions as F
-
     quoted = ",".join(
         "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'" for v in vals
     )
@@ -524,31 +473,32 @@ def assign_tzid_udf_packed(
     ocean_bands: list[dict],
     knn_max_m: float = KNN_MAX_METERS,
 ) -> DataFrame:
-    """assign_tzid_udf over a packed int64 micro-degree coordinate column
-    `xy` (see pack_coords_col): 8 input bytes/row through the Arrow pipe
-    instead of 16. For coordinates on the 1e-6 grid, identical
-    assignments (tested row-equal on the bench grid). Every input column
-    except `xy` passes through to the output — callers that need a
-    composite row identity (e.g. assign_pages joining back on
-    (url, warc_ts) in a table where urls recur across crawls) carry it
-    alongside url; the Arrow pipe still moves only the 8-byte xy."""
-    import pyspark.sql.functions as F
-    from pyspark.sql.functions import pandas_udf
+    """pages(..., xy) -> pages(...) + (tzid, method): THE DataFrame-level
+    tzid assignment — batch job, stream, library and oracle queries all
+    call this, with `xy` from pack_coords_col.
 
+    method: cell (full-cell hit) | pip (boundary cell + exact test) |
+    knn (offshore <= 1852 m) | ocean (Etc band) | none (no coordinate).
+
+    A scalar pandas UDF: only the 8-byte xy crosses the Arrow pipe (its
+    transfer, not the kernel, dominates the cost) and only (code int32,
+    method int8) come back; tzid strings are a JVM element_at over a
+    literal array. Every other input column passes through — callers
+    select lon/lat or a composite row identity (url, warc_ts) alongside.
+
+    Precision model: a point is assigned at its coordinates snapped to
+    the 1e-6-degree grid, the reference's fixed precision
+    (index.js:327-328). Paths that need doubles (the sharded stage 2)
+    take them from snapped_coords_cols, so a page a few 1e-7 deg from a
+    zone edge gets the same zone on every path."""
     band_edges = _band_edges(ocean_bands)
     band_tzids = [b["tzid"] for b in ocean_bands]
     n_bands = len(band_tzids)
 
-    @pandas_udf("code int, m tinyint")
+    @F.pandas_udf("code int, m tinyint")
     def _codes(xy: pd.Series) -> pd.DataFrame:
         cm = cellmap_bc.value
-        v = xy.to_numpy(dtype=np.int64, na_value=-1)
-        lon = (v >> np.int64(32)) / 1e6 - 180.0
-        lat = (v & np.int64(0xFFFFFFFF)) / 1e6 - 90.0
-        bad = v < 0
-        if bad.any():
-            lon[bad] = np.nan
-            lat[bad] = np.nan
+        lon, lat = decode_xy(xy.to_numpy(dtype=np.int64, na_value=-1))
         code, method = assign_codes(cm, band_edges, n_bands, lon, lat, knn_max_m)
         return pd.DataFrame({"code": code, "m": method})
 
@@ -558,58 +508,6 @@ def assign_tzid_udf_packed(
     passthrough = [c for c in pages_with_xy.columns if c != "xy"]
     return out.select(
         *passthrough,
-        F.when(
-            F.col("__a.code") >= 0, F.element_at(tz_lits, F.col("__a.code") + 1)
-        ).alias("tzid"),
-        F.element_at(m_lits, F.col("__a.m") + 1).alias("method"),
-    )
-
-
-def assign_tzid_udf(
-    pages_with_coords: DataFrame,
-    cellmap_bc,
-    ocean_bands: list[dict],
-    knn_max_m: float = KNN_MAX_METERS,
-    keep_coords: bool = False,
-) -> DataFrame:
-    """Scalar-pandas-UDF variant of assign_tzid — the 10^12-row hot path.
-
-    Identical output semantics (tested equal to assign_tzid row-for-row),
-    different physical shape: only (lon, lat) cross the JVM->Python Arrow
-    boundary and only (code int32, method int8) come back — 5 bytes/row
-    out vs two strings. url (and any other page columns) never leave the
-    JVM, and the code->tzid string materialization is a codegen'd
-    element_at over a literal array. Profiling on the sandbox showed the
-    Arrow round trip, not the geometry kernel, dominated the mapInPandas
-    path (~80%); this cuts transferred bytes ~4x, which is also what makes
-    throughput scale with cores — the pipe is the shared resource.
-    """
-    import pyspark.sql.functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    band_edges = _band_edges(ocean_bands)
-    band_tzids = [b["tzid"] for b in ocean_bands]
-    n_bands = len(band_tzids)
-
-    @pandas_udf("code int, m tinyint")
-    def _codes(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        cm = cellmap_bc.value
-        code, method = assign_codes(
-            cm,
-            band_edges,
-            n_bands,
-            lon.to_numpy(dtype=np.float64, na_value=np.nan),
-            lat.to_numpy(dtype=np.float64, na_value=np.nan),
-            knn_max_m,
-        )
-        return pd.DataFrame({"code": code, "m": method})
-
-    tz_lits = _string_array_expr(list(cellmap_bc.value.tzids) + band_tzids)
-    m_lits = F.array(*[F.lit(m) for m in METHOD_NAMES])
-    out = pages_with_coords.withColumn("__a", _codes(F.col("lon"), F.col("lat")))
-    cols = ["url"] + (["lon", "lat"] if keep_coords else [])
-    return out.select(
-        *cols,
         F.when(
             F.col("__a.code") >= 0, F.element_at(tz_lits, F.col("__a.code") + 1)
         ).alias("tzid"),

@@ -1,15 +1,13 @@
-"""Per-partition lineage + metrics (north_rule B9).
+"""Per-partition lineage (north_rule B9).
 
-Two complementary mechanisms:
+`lineage_table`: a mapInPandas pass emitting one row per partition
+(partition_id, rows, min/max of a key, sha256 of sorted keys) — a durable
+side table that joins stage outputs to their inputs, the row-level analog
+of the reference's md5 content keys (reference index.js:806-826).
 
-- `track_batches`: wraps a mapInPandas-style generator so every Arrow
-  batch increments Spark ACCUMULATORS (rows in/out, batches) — live,
-  cheap, visible on the driver after any action, no extra shuffle.
-- `lineage_table`: a mapInPandas pass emitting one row per partition
-  (partition_id, rows, bytes, min/max of a key, sha256 of sorted keys) —
-  a durable side table that joins stage outputs to their inputs, the
-  row-level analog of the reference's md5 content keys
-  (reference index.js:806-826).
+Live stage row counts come from `DataFrame.observe` (an `Observation`
+read after the action), not accumulators, which over-count when Spark
+re-runs a task.
 """
 
 from __future__ import annotations
@@ -18,48 +16,11 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 LINEAGE_SCHEMA = (
     "partition_id int, n_rows long, key_min string, key_max string, keys_sha256 string"
 )
-
-
-class StageMetrics:
-    """Accumulator bundle for one stage."""
-
-    def __init__(self, spark: SparkSession, stage: str):
-        sc = spark.sparkContext
-        self.stage = stage
-        self.rows_in = sc.accumulator(0)
-        self.rows_out = sc.accumulator(0)
-        self.batches = sc.accumulator(0)
-
-    def wrap(self, fn):
-        """Wrap a mapInPandas generator fn(iter) -> iter so the
-        accumulators count every batch that flows through it."""
-        rows_in, rows_out, batches = self.rows_in, self.rows_out, self.batches
-
-        def _wrapped(batch_iter):
-            def _counted_in():
-                for pdf in batch_iter:
-                    rows_in.add(len(pdf))
-                    batches.add(1)
-                    yield pdf
-
-            for out in fn(_counted_in()):
-                rows_out.add(len(out))
-                yield out
-
-        return _wrapped
-
-    def snapshot(self) -> dict:
-        return {
-            "stage": self.stage,
-            "rows_in": self.rows_in.value,
-            "rows_out": self.rows_out.value,
-            "batches": self.batches.value,
-        }
 
 
 def lineage_table(df: DataFrame, key_col: str) -> DataFrame:

@@ -3,10 +3,11 @@
 The reference prints per-task percentage and a running ETA from the
 average task duration so far. On Spark the per-task unit is a STAGE (the
 zone build, the validation pass, each derived product), not a row — rows
-are the executors' business and are tracked by the lineage accumulators
-(plans/lineage.py). The arithmetic mirrors the reference exactly:
-percentage rounded to one decimal, ETA = average-time-per-task x
-tasks-left, formatted at the largest unit under its rollover
+are the executors' business, counted with DataFrame.observe or the
+per-partition lineage tables (plans/lineage.py), not here. The
+arithmetic mirrors the reference exactly: percentage rounded to one
+decimal, ETA = average-time-per-task x tasks-left, formatted at the
+largest unit under its rollover
 (seconds < 60, minutes < 60, hours < 24, else days), '?' before the
 first task completes. A `clock` injection point keeps tests (and any
 deterministic replay) off the wall clock."""

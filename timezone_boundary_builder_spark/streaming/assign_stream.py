@@ -5,10 +5,10 @@ exist because the serving layer's input is a continuously-crawled pages
 table. Same operators, streaming plan:
 
 - `stream_assign`: readStream over the pages directory -> JVM-side
-  geocode (with_coordinates) -> the same broadcast two-stage join
-  mapInPandas -> parquet sink with checkpointLocation. Restart-safe: the
-  sink's checkpoint + the append-only source give exactly-once file
-  output.
+  geocode (with_coordinates) -> the batch job's packed two-stage join
+  (pack_coords_col + assign_tzid_udf_packed) -> parquet sink with
+  checkpointLocation. Restart-safe: the sink's checkpoint + the
+  append-only source give exactly-once file output.
 - `stream_event_counts`: watermarked sliding-window aggregation over the
   events table (the canonical late-data pattern).
 - `stream_dedup_first_seen`: custom stateful operator via
@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.geocode import with_coordinates
-from ..operators.spatial_join import ASSIGN_SCHEMA, make_assign_fn
+from ..operators.spatial_join import assign_tzid_udf_packed, pack_coords_col
 from ..sources.pages import PAGES_SCHEMA
 
 
@@ -36,16 +36,16 @@ def stream_assign(
     cellmap_bc,
     ocean_bands: list[dict],
 ):
-    """Streaming two-stage spatial join. Returns the StreamingQuery
-    (caller awaits termination; availableNow drains existing files)."""
+    """Streaming two-stage spatial join, sinking (url, lon, lat, tzid,
+    method). Returns the StreamingQuery (caller awaits termination;
+    availableNow drains existing files)."""
     pages = (
         spark.readStream.schema(PAGES_SCHEMA)
         .option("maxFilesPerTrigger", 8)
         .parquet(source_dir)
     )
-    with_xy = with_coordinates(pages)
-    fn = make_assign_fn(cellmap_bc, ocean_bands)
-    assigned = with_xy.select("url", "lon", "lat").mapInPandas(fn, ASSIGN_SCHEMA)
+    with_xy = with_coordinates(pages).select("url", "lon", "lat", pack_coords_col())
+    assigned = assign_tzid_udf_packed(with_xy, cellmap_bc, ocean_bands)
     return (
         assigned.writeStream.format("parquet")
         .option("path", sink_dir)
